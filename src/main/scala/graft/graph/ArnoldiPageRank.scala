@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlInternals}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -66,127 +66,93 @@ object ArnoldiPageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5)
 
+  /** One Arnoldi step job: w = M v_j for the full operator
+    * M x = αPᵀx + (α·dᵀx + (1−α)·eᵀx)·v (PageRankMult, ppagerank.cc:692-718),
+    * given eᵀv_j and dᵀv_j, with the batched VecMTDot H(i,j) = vᵢᵀw for
+    * i ≤ j (ppagerank.cc:573) and ‖w‖² observed on the materializing tasks —
+    * plus eᵀw and dᵀw when `sums` (the single-pass path, which derives the
+    * new basis vector's sums analytically).
+    */
+  private[graft] def basisStep(prep: PageRank.Prepared, frame: DataFrame, j: Int,
+      alpha: Double, ev: Double, dv: Double, v: Column,
+      sums: Boolean): IterativeKernel.Step = {
+    val yraw = PageRank.spmv(prep,
+      frame.select(col("id"), col(s"v$j").as("rank"))).withColumnRenamed("y", "yraw")
+    // teleport (and every other measured scalar below) travels through
+    // the codegen REFERENCES array (stableLit), never an inline literal:
+    // parallel-sum reduction order perturbs these doubles in the last ulp
+    // between runs, so a `lit` would change the generated source every
+    // run and force a full Janino recompile of every Arnoldi-step stage
+    // (~95 classes per solve — measured as the dominant, environment-
+    // sensitive cost of this solver before the fix)
+    val teleport = alpha * dv + (1 - alpha) * ev
+    IterativeKernel.Step(
+      frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
+        .withColumn("w",
+          lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
+            GraftSqlInternals.stableLit(teleport) * v)
+        .drop("yraw"),
+      (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++ Seq(sum(col("w") * col("w"))) ++
+        (if (sums) Seq(sum(col("w")), sum(col("dang") * col("w"))) else Nil))
+  }
+
   def run(g: LinkGraph, cfg: ArnoldiConfig = ArnoldiConfig(),
       runId: String = "arnoldi",
       personalization: Option[DataFrame] = None,
-      resume: Boolean = false): (Dataset[VertexRank], PageRankStats) = {
+      resume: Boolean = false): (Dataset[VertexRank], PageRankStats) =
+    IterativeKernel.ranks(g, runId, cfg.maxRestarts, cfg.tol, IterativeKernel.Snapshots(
+        cfg.checkpointDir, cfg.checkpointEvery, prefix = "restart_")) { it =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.numVertices
     val alpha = cfg.alpha
     val k = cfg.k
     // personalization v (ppagerank.cc:91-104) rides as a column; the full
     // operator becomes M x = αPᵀx + (α·dᵀx + (1−α)·eᵀx)·v
     val hasV = personalization.isDefined
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
     val prep = PageRank.prepare(g,
       PageRankConfig(saltThreshold = cfg.saltThreshold, saltBuckets = cfg.saltBuckets))
-
-    val srcs = g.edges.select(col("src").as("id")).distinct().withColumn("nd", lit(1))
-    val base0 = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-    val base = personalization match {
-      case Some(p) => base0
-        .join(p.select(col("id"), col("v").cast("double")), Seq("id"), "left")
-        .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
-      case None => base0
-    }
     val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-
-    /** w = M x for column `xc` of `frame`, given the scalars eᵀx, dᵀx.
-      * Pure plan transformation (no action): adds column `w`.
-      */
-    def mMult(frame: DataFrame, xc: String, ex: Double, dx: Double): DataFrame = {
-      val yraw = PageRank.spmv(prep,
-        frame.select(col("id"), col(xc).as("rank"))).withColumnRenamed("y", "yraw")
-      // teleport (and every other measured scalar below) travels through
-      // the codegen REFERENCES array (stableLit), never an inline literal:
-      // parallel-sum reduction order perturbs these doubles in the last ulp
-      // between runs, so a `lit` would change the generated source every
-      // run and force a full Janino recompile of every Arnoldi-step stage
-      // (~95 classes per solve — measured as the dominant, environment-
-      // sensitive cost of this solver before the fix)
-      val teleport = alpha * dx + (1 - alpha) * ex
-      frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("w",
-          lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
-            GraftSqlInternals.stableLit(teleport) * vCol)
-        .drop("yraw")
-    }
 
     // Resume (north rule): x is the whole inter-restart state; scalars are
     // re-measured below, identically for a cold and a resumed start.
-    var startRestart = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/$runId", "restart_")
-          .map { case (kk, snap) => startRestart = kk; snap }
-      }
-    } else None
-
     // x₀ = v (ppagerank.cc:544-550)
-    val tr0 = GraftSqlInternals.truncate(resumed.getOrElse(
-      base.withColumn("x", if (hasV) col("v") else lit(1.0 / n))))
-    var x = tr0.df
-    var xHandle: Option[org.apache.spark.sql.GraftSqlInternals.Truncated] = Some(tr0)
+    it.start(it.resume(resume)().getOrElse(
+      IterativeKernel.base(g, personalization).withColumn("x", vCol)))
     var (ex, dx, xNorm2, xNorm1) = {
-      val r = x.agg(sum(col("x")), sum(col("dang") * col("x")),
-        sum(col("x") * col("x")), sum(abs(col("x")))).head()
-      (r.getDouble(0), r.getDouble(1), math.sqrt(r.getDouble(2)), r.getDouble(3))
+      val r = IterativeKernel.measure(it.frame, sum(col("x")), sum(col("dang") * col("x")),
+        sum(col("x") * col("x")), sum(abs(col("x"))))
+      (r(0), r(1), math.sqrt(r(2)), r(3))
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var restart = startRestart
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
     // fast single-reduction CGS for relaxed tolerances; escalated to CGS2
     // when the restart residual stagnates at the fast path's cancellation
     // floor (see ArnoldiConfig.reorthog)
     var cgs2 = cfg.reorthog.getOrElse(cfg.tol < 1e-9)
     var stagnant = 0
 
-    while (restart < cfg.maxRestarts && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
+    it.loop {
       val h = Array.ofDim[Double](k + 1, k) // (k+1)×k, ppagerank.cc:527
       // v0 = x/‖x‖₂ (ppagerank.cc:556-559)
-      var frame = x.withColumn("v0",
+      it.frame = it.frame.withColumn("v0",
         col("x") / GraftSqlInternals.stableLit(xNorm2)).drop("x")
-      var ev = ex / xNorm2 // eᵀv_j
-      var dv = dx / xNorm2 // dᵀv_j
-      val evs = Array.fill(k + 1)(0.0); evs(0) = ev
-      val dvs = Array.fill(k + 1)(0.0); dvs(0) = dv
+      val evs = Array.fill(k + 1)(0.0); evs(0) = ex / xNorm2 // eᵀv_j
+      val dvs = Array.fill(k + 1)(0.0); dvs(0) = dx / xNorm2 // dᵀv_j
       var effK = 0 // columns of H actually built
       var breakdown = false
 
       var j = 0
-      var prevHandle: Option[org.apache.spark.sql.GraftSqlInternals.Truncated] = None
-      // release the previous truncated frame only AFTER an action has
-      // materialized its successor — localCheckpoint truncates lineage, so
-      // unpersisting earlier would lose the only copy of the data
-      def retire(t: org.apache.spark.sql.GraftSqlInternals.Truncated): Unit = {
-        prevHandle.foreach(_.handle.unpersist(false))
-        prevHandle = Some(t)
-      }
       while (j < k && !breakdown) {
-        // w = M v_j; H(i,j) = vᵢᵀw for i ≤ j (VecMTDot, ppagerank.cc:573)
-        frame = mMult(frame, s"v$j", evs(j), dvs(j))
+        // w = M v_j; H(i,j) = vᵢᵀw for i ≤ j
+        val row = it.step(basisStep(prep, it.frame, j, alpha, evs(j), dvs(j), vCol,
+          sums = !cgs2))
+        for (i <- 0 to j) h(i)(j) = row(i)
+        val ww = row(j + 1)
         if (!cgs2) {
-          // ONE observe job per step: dots, ‖w‖², eᵀw, dᵀw all ride the
-          // tasks that materialize w; β and the eᵀ/dᵀ sums of the new basis
+          // ONE observe job per step: β and the eᵀ/dᵀ sums of the new basis
           // vector follow analytically (β² = ‖w‖² − Σh² by orthogonality)
-          val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
-            Seq(sum(col("w") * col("w")), sum(col("w")), sum(col("dang") * col("w")))
-          val (t1, obs1) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots", dotCols.head, dotCols.tail: _*))
-          frame = t1.df
-          val row = obs1("dots")
-          retire(t1)
-          for (i <- 0 to j) h(i)(j) = row.getDouble(i)
-          val ww = row.getDouble(j + 1)
-          val ew = row.getDouble(j + 2)
-          val dw = row.getDouble(j + 3)
+          val ew = row(j + 2)
+          val dw = row(j + 3)
           val beta2 = ww - (0 to j).map(i => h(i)(j) * h(i)(j)).sum
           val beta = math.sqrt(math.max(beta2, 0.0))
           h(j + 1)(j) = beta
@@ -197,41 +163,26 @@ object ArnoldiPageRank {
             val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
               acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
             }
-            frame = frame.withColumn(s"v${j + 1}",
+            it.frame = it.frame.withColumn(s"v${j + 1}",
               gCol / GraftSqlInternals.stableLit(beta)).drop("w")
             evs(j + 1) = (ew - (0 to j).map(i => h(i)(j) * evs(i)).sum) / beta
             dvs(j + 1) = (dw - (0 to j).map(i => h(i)(j) * dvs(i)).sum) / beta
           }
         } else {
-          val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
-            Seq(sum(col("w") * col("w")))
-          // batched VecMTDot rides as CollectMetrics accumulators on the
-          // materializing tasks (single-action kernel, as in PageRank.run)
-          val (t1, obs1) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots", dotCols.head, dotCols.tail: _*))
-          frame = t1.df
-          val row = obs1("dots")
-          retire(t1)
-          for (i <- 0 to j) h(i)(j) = row.getDouble(i)
-          val ww = row.getDouble(j + 1)
           // g = w − Σ h(i,j)·vᵢ, then CGS2: measure the residual projections
           // c_i = vᵢᵀg (≈0 in exact arithmetic), fold them back into H, and
           // measure ‖g‖², eᵀg, dᵀg directly in the same aggregate
           val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
             acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
           }
-          frame = frame.withColumn("g", gCol).drop("w")
-          val dotCols2 = (0 to j).map(i => sum(col(s"v$i") * col("g"))) ++
-            Seq(sum(col("g") * col("g")), sum(col("g")), sum(col("dang") * col("g")))
-          val (t2, obs2) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots2", dotCols2.head, dotCols2.tail: _*))
-          frame = t2.df
-          val row2 = obs2("dots2")
-          retire(t2)
-          val c = Array.tabulate(j + 1)(i => row2.getDouble(i))
-          val gg = row2.getDouble(j + 1)
-          val eg = row2.getDouble(j + 2)
-          val dg = row2.getDouble(j + 3)
+          it.frame = it.frame.withColumn("g", gCol).drop("w")
+          val row2 = it.step(IterativeKernel.Step(it.frame,
+            (0 to j).map(i => sum(col(s"v$i") * col("g"))) ++
+              Seq(sum(col("g") * col("g")), sum(col("g")), sum(col("dang") * col("g")))))
+          val c = Array.tabulate(j + 1)(i => row2(i))
+          val gg = row2(j + 1)
+          val eg = row2(j + 2)
+          val dg = row2(j + 3)
           for (i <- 0 to j) h(i)(j) += c(i)
           // β = ‖g − Σ cᵢvᵢ‖₂ via the identity on the measured gᵀg — safe here
           // because the c correction is O(ε)·‖g‖, so no catastrophic cancellation
@@ -245,7 +196,7 @@ object ArnoldiPageRank {
             val g2Col = (0 to j).foldLeft(col("g")) { (acc, i) =>
               acc - GraftSqlInternals.stableLit(c(i)) * col(s"v$i")
             }
-            frame = frame.withColumn(s"v${j + 1}",
+            it.frame = it.frame.withColumn(s"v${j + 1}",
               g2Col / GraftSqlInternals.stableLit(beta)).drop("g")
             evs(j + 1) = (eg - (0 to j).map(i => c(i) * evs(i)).sum) / beta
             dvs(j + 1) = (dg - (0 to j).map(i => c(i) * dvs(i)).sum) / beta
@@ -281,61 +232,36 @@ object ArnoldiPageRank {
       val residCol = (0 to (if (breakdown) m - 1 else m)).map(i =>
           GraftSqlInternals.stableLit(rCoef(i)) * col(s"v$i"))
         .reduce((a, b) => a + b)
-      val (tr2, obsR) = GraftSqlInternals.truncateObserved(
-        frame.withColumn("x", xCol)
-          .observe("restart", sum(abs(residCol)), sum(abs(col("x"))),
-            sum(col("dang") * col("x")), sum(col("x") * col("x")),
-            sum(col("x")))
-          .select(carry :+ col("x"): _*))
-      val row = obsR("restart")
-      val num = row.getDouble(0)
-      xNorm1 = row.getDouble(1)
-      dx = row.getDouble(2)
-      xNorm2 = math.sqrt(row.getDouble(3))
-      ex = row.getDouble(4) // measured eᵀx (an analytic recursion drifts)
-      delta = num / xNorm1
-      x = tr2.df
-      // the basis-vector frame and the previous restart's x are dead now
-      prevHandle.foreach(_.handle.unpersist(false))
-      xHandle.foreach(_.handle.unpersist(false))
-      xHandle = Some(tr2)
+      val row = it.step(IterativeKernel.Step(it.frame.withColumn("x", xCol),
+        Seq(sum(abs(residCol)), sum(abs(col("x"))), sum(col("dang") * col("x")),
+          sum(col("x") * col("x")), sum(col("x"))),
+        carry :+ col("x")))
+      xNorm1 = row(1)
+      dx = row(2)
+      xNorm2 = math.sqrt(row(3))
+      ex = row(4) // measured eᵀx (an analytic recursion drifts)
+      val delta = row(0) / xNorm1
 
-      restart += 1
       // stagnation → escalate to CGS2 (auto mode only): two consecutive
       // restarts without ≥10% residual improvement means the fast path has
       // hit its analytic-β cancellation floor above tol — without this the
       // solver would spin to maxRestarts at a flat residual
       if (!cgs2 && cfg.reorthog.isEmpty && delta >= cfg.tol) {
-        val prev = trace.lastOption.map(_.residual).getOrElse(Double.MaxValue)
-        if (delta > 0.9 * prev) stagnant += 1 else stagnant = 0
+        if (delta > 0.9 * it.residual) stagnant += 1 else stagnant = 0
         if (stagnant >= 2) cgs2 = true
       }
-      trace += IterMetric(runId, restart, delta, xNorm1, (System.nanoTime() - t0) / 1000000L)
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && restart % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          x = graft.ingest.TableIO.commitSnapshotWithLineage(
-            x, s"$dir/$runId", runId, "restart_", restart)
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty)
-            graft.ingest.TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+      (delta, xNorm1)
     }
 
     prep.close()
     // sign-fix + L1-normalize (deviation from reference; see scaladoc).
     // eᵀx of the final iterate is `ex` — measured by the observe of the job
     // that materialized this x (restart loop) or by the init aggregate (no
-    // restarts ran); a dedicated agg job here re-measured the same sum.
-    val signedSum = ex
-    val sign = if (signedSum < 0) -1.0 else 1.0
-    val ranks = x.select(col("id"),
-      (col("x") * lit(sign) /
-        GraftSqlInternals.stableLit(math.abs(signedSum))).as("rank")).as[VertexRank]
-    (ranks, PageRankStats(restart, delta, reason, trace.toSeq))
-    } // withWidth
-  }
+    // restarts ran).
+    val sign = if (ex < 0) -1.0 else 1.0
+    val ranks = it.frame.select(col("id"),
+      (col("x") * lit(sign) / GraftSqlInternals.stableLit(math.abs(ex))).as("rank"))
+      .as[VertexRank]
+    (ranks, it.stats)
+    }
 }

@@ -19,10 +19,9 @@ import graft.model.Edge
 object ConnectedComponents {
 
   /** @return (id, component) for every vertex in `vertices`. */
-  def run(edges: Dataset[Edge], vertices: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    graft.util.ShuffleWidth.withWidth(spark, edges.rdd.getNumPartitions) {
-
+  def run(edges: Dataset[Edge], vertices: DataFrame, maxIter: Int = 50): DataFrame =
+    // stops at the first round that changes no label (fewer than 1 change)
+    IterativeKernel(edges, "cc", maxIter, tol = 1.0) { it =>
     // Undirected, deduplicated adjacency; both directions materialized once.
     val und = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -31,13 +30,9 @@ object ConnectedComponents {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
 
-    val t0 = org.apache.spark.sql.GraftSqlInternals.truncate(
-      vertices.select(col("id"), col("id").as("component")))
-    var labelsHandle = t0.handle
-    var labels = t0.df
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    it.start(vertices.select(col("id"), col("id").as("component")))
+    it.loop {
+      val labels = it.frame
       // min over closed neighborhood
       val neigh = und.join(labels, und("dst") === labels("id"))
         .groupBy(und("src").as("id"))
@@ -52,21 +47,15 @@ object ConnectedComponents {
       val byId = step1.select(col("id").as("cid"), col("component").as("cc2"))
       // labels is referenced 3× per round (neigh, step1, shortcut) — the plan
       // would grow 3^k without per-round lineage truncation.
-      val (t, obs) = org.apache.spark.sql.GraftSqlInternals.truncateObserved(
+      val changed = it.step(IterativeKernel.Step(
         step1.join(byId, step1("component") === byId("cid"), "left")
           .select(col("id"),
-            coalesce(col("cc2"), col("component")).as("component"), col("old"))
-          .observe("cc",
-            sum(when(col("component") =!= col("old"), 1L).otherwise(0L)).as("changed"))
-          .select(col("id"), col("component")))
-      changed = Option(obs("cc").get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      labelsHandle.unpersist(false)
-      labelsHandle = t.handle
-      labels = t.df
-      iter += 1
+            coalesce(col("cc2"), col("component")).as("component"), col("old")),
+        Seq(sum(when(col("component") =!= col("old"), 1L).otherwise(0L)).as("changed")),
+        Seq(col("id"), col("component"))))(0)
+      (changed, 0.0)
     }
     und.unpersist(false)
-    labels
-    } // withWidth
-  }
+    it.frame
+    }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -47,267 +47,165 @@ object InOutPageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 10)
 
+  /** One inner Richardson sweep step x ← βy + f; y ← Bx;
+    * δ_in = ‖f + βy_new − x‖₁ (ppagerank.cc:423-435) as ONE job over the
+    * sweep frame `st` (carry, f, x, y). dᵀx = β·dᵀy + dᵀf is known BEFORE
+    * the job (d is static, f fixed across the sweep — the same scalar as the
+    * measured sx − eᵀPᵀx form in exact arithmetic), so
+    * y_new = Pᵀx + (dᵀx)v is an in-job column and the inner residual, the
+    * outer residual δ = ‖x − αy − (1−α)v‖₁ (ppagerank.cc:456-465) and the
+    * next step's dᵀ(Pᵀx) all ride the observe.
+    */
+  private[graft] def innerStep(prep: PageRank.Prepared, st: DataFrame, carry: Seq[Column],
+      alpha: Double, beta: Double, dtx: Double, v: Column): IterativeKernel.Step = {
+    val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
+    val yraw = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
+    IterativeKernel.Step(
+      withX.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
+        .withColumn("yc", coalesce(col("y"), lit(0.0)))
+        .withColumn("yn", col("yc") + GraftSqlInternals.stableLit(dtx) * v),
+      Seq(sum(col("dang") * col("yc")).as("dyraw"),
+        sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
+        sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * v)).as("dout")),
+      carry ++ Seq(col("f"), col("x"), col("yn").as("y")))
+  }
+
   def run(g: LinkGraph, cfg: InOutConfig = InOutConfig(),
       runId: String = "inout",
       personalization: Option[DataFrame] = None,
       resume: Boolean = false): (Dataset[VertexRank], PageRankStats) = {
+    // Snapshot state: the iterate frame plus `im`, the inner/power mode flag
+    // — the only non-recomputable scalar state (eᵀx and eᵀv are re-measured
+    // from the frame below).
+    var innerMode = true
+    val snapshots = IterativeKernel.Snapshots(cfg.checkpointDir, cfg.checkpointEvery,
+      state = _.withColumn("im", lit(innerMode)))
+    IterativeKernel.ranks(g, runId, cfg.maxIter, cfg.tol, snapshots) { it =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.numVertices
     val alpha = cfg.alpha
     val beta = cfg.beta.getOrElse(alpha / 2)
-    val vUniform = 1.0 / n
     // personalization v (ppagerank.cc:91-104): carried as a column; the
     // analytic eᵀ bookkeeping generalizes with sv = eᵀv (1 for uniform)
     val hasV = personalization.isDefined
-    val vCol = if (hasV) col("v") else lit(vUniform)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
+    // the frame carries the static dangling indicator through the whole
+    // solve: the inner sweep's analytic dᵀx recurrence and the power step's
+    // observe both read it
+    val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
     val prep = PageRank.prepare(g,
       PageRankConfig(saltThreshold = cfg.saltThreshold, saltBuckets = cfg.saltBuckets))
 
-    // rolling lineage truncation: each checkpointed frame is unpersisted as
-    // soon as its successor has materialized (the reference pattern from
-    // PageRank.run) — without this, every inner sweep leaks cached blocks.
-    // The aggregates ride as CollectMetrics accumulators on the
-    // materializing tasks (same single-action kernel as PageRank.run).
-    var prevHandle: Option[GraftSqlInternals.Truncated] = None
-    def truncateAndAgg(df: DataFrame, aggCols: Seq[Column]): (DataFrame, Row) = {
-      val (t, observed) = GraftSqlInternals.truncateObserved(
-        df.observe("agg", aggCols.head, aggCols.tail: _*))
-      prevHandle.foreach(_.handle.unpersist(false))
-      prevHandle = Some(t)
-      (t.df, observed("agg"))
+    val resumed = it.resume(resume) { (snap, _) =>
+      innerMode = snap.select(col("im")).head().getBoolean(0)
+      val st = snap.drop("im")
+      // snapshots older than the dang-carrying inner sweep lack the column
+      if (st.columns.contains("dang")) st else IterativeKernel.withDangling(g, st)
     }
-
-    /** Static dangling indicator (dang=1 iff no out-edges) as a lazy column —
-      * folded into whatever job materializes the frame next. Carried through
-      * the whole solve: the inner sweep's analytic dᵀx recurrence and the
-      * power kernel's observe both read it.
-      */
-    def attachDang(fr: DataFrame): DataFrame =
-      if (fr.columns.contains("dang")) fr
-      else {
-        val srcs = g.edges.select(col("src").as("id")).distinct()
-          .withColumn("nd", lit(1))
-        fr.join(srcs, Seq("id"), "left")
-          .withColumn("dang", when(col("nd").isNull, 1.0).otherwise(0.0))
-          .drop("nd")
-      }
-
-    // Resume (north rule): the snapshot carries the iterate frame plus `im`
-    // (the inner/power mode flag — the only non-recomputable scalar state;
-    // eᵀx and eᵀv are re-measured from the frame below).
-    var innerMode = true
-    var startIter = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_")
-          .map { case (k, snap) =>
-            startIter = k
-            innerMode = snap.select(col("im")).head().getBoolean(0)
-            snap.drop("im")
-          }
-      }
-    } else None
-
     // x₀ = v (ppagerank.cc:366-371); y₀ = Bx₀
-    var frame = resumed.getOrElse(personalization match {
-      case Some(p) => g.vertices
-        .join(p.select(col("id"), col("v").cast("double")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("v"), lit(0.0)).as("v"))
-        .withColumn("x", col("v"))
-      case None => g.vertices.withColumn("x", lit(vUniform))
-    })
-    frame = attachDang(frame) // no-op when the (snapshot) frame carries it
-    val sv = if (hasV) frame.agg(sum(col("v"))).head().getDouble(0) else 1.0
-    var sx = if (resumed.isDefined) frame.agg(sum(col("x"))).head().getDouble(0) else sv
+    it.frame = resumed.getOrElse(IterativeKernel.base(g, personalization)
+      .withColumn("x", vCol))
+    val sv = if (hasV) IterativeKernel.measure(it.frame, sum(col("v")))(0) else 1.0
+    var sx = if (resumed.isDefined) IterativeKernel.measure(it.frame, sum(col("x")))(0) else sv
     // dᵀv (static) and dᵀy of the frame's y column — the seeds of the inner
     // sweep's analytic dᵀx recurrence (dᵀx = β·dᵀy + dᵀf)
     var dv = 0.0
     var dy = 0.0
-    if (resumed.isEmpty || innerMode && !frame.columns.contains("y")) {
+    if (resumed.isEmpty || innerMode && !it.frame.columns.contains("y")) {
       // init y₀ = Bx₀ = Pᵀx₀ + (dᵀx₀)v with dᵀx₀ = sx − eᵀPᵀx₀
       // (ppagerank.cc:366-377, implicit form 754-767) — ONE job whose
       // observe also measures dᵀv and dᵀ(Pᵀx₀) for the recurrence seeds
-      val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
-      val pre = frame.join(yraw, Seq("id"), "left")
-        .withColumn("yraw", coalesce(col("y"), lit(0.0))).drop("y")
-      val (joined, row) = truncateAndAgg(pre, Seq(sum(col("yraw")),
-        sum(col("dang") * col("yraw")), sum(col("dang") * vCol)))
-      val s = Option(row.get(0)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      val dtx0 = sx - s
-      dv = Option(row.get(2)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      dy = Option(row.get(1)).map(_.asInstanceOf[Double]).getOrElse(0.0) + dtx0 * dv
-      frame = joined
+      val yraw = PageRank.spmv(prep, it.frame.select(col("id"), col("x").as("rank")))
+      val r = it.step(IterativeKernel.Step(
+        it.frame.join(yraw, Seq("id"), "left")
+          .withColumn("yraw", coalesce(col("y"), lit(0.0))).drop("y"),
+        Seq(sum(col("yraw")), sum(col("dang") * col("yraw")), sum(col("dang") * vCol))))
+      val dtx0 = sx - r(0)
+      dv = r(2)
+      dy = r(1) + dtx0 * dv
+      it.frame = it.frame
         .withColumn("y", col("yraw") + GraftSqlInternals.stableLit(dtx0) * vCol)
         .drop("yraw") // (id, dang, [v,] x, y)
     } else if (innerMode) {
       // resumed mid-inner-mode snapshot (carries y): re-measure the seeds
-      val row = frame.agg(sum(col("dang") * col("y")),
-        sum(col("dang") * vCol)).head()
-      dy = row.getDouble(0)
-      dv = row.getDouble(1)
+      val r = IterativeKernel.measure(it.frame, sum(col("dang") * col("y")),
+        sum(col("dang") * vCol))
+      dy = r(0)
+      dv = r(1)
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var delta = Double.MaxValue
-    var iter = startIter
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
     // Power-mode scalar state: dᵀx and eᵀx of the CURRENT frame, measured by
-    // the job that materialized it (the single-action kernel of
-    // PageRank.run). `powerReady` marks that the frame carries the static
-    // dangling indicator and the scalars are current; the transition job
-    // below establishes both in one materialization.
+    // the job that materialized it. `powerReady` marks that they are
+    // current; the transition job below establishes them.
     var dtxP = 0.0
     var sxP = 0.0
     var powerReady = false
 
-    /** Transition into the power kernel: attach the static dangling
-      * indicator (dang=1 iff no out-edges) unless the frame already carries
-      * it (a resumed power-mode snapshot), and measure dᵀx, eᵀx — ONE job.
-      * Afterwards every power step is a single materializing job whose
-      * observe feeds the next step's ω, exactly the PageRank.run kernel
-      * (ω = 1 − α(eᵀx − dᵀx) = 1 − ‖αPᵀx‖₁, ppagerank.cc:307-315 — the
-      * measured-sum form the old two-job step computed with a dedicated
-      * aggregation pass per step).
-      */
-    def enterPower(fr: DataFrame): DataFrame = {
-      val carry = Seq(col("id"), col("dang")) ++
-        (if (hasV) Seq(col("v")) else Nil)
-      val withDang = attachDang(fr).select(carry :+ col("x"): _*)
-      val (t, row) = truncateAndAgg(withDang,
-        Seq(sum(col("dang") * col("x")), sum(col("x"))))
-      dtxP = row.getDouble(0)
-      sxP = row.getDouble(1)
-      powerReady = true
-      t
-    }
-
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
+    it.loop {
       if (!innerMode) {
-        // plain power step (ppagerank.cc:385-409): y = αPᵀx; ω = 1−‖y‖₁;
-        // y += ωv; δ = ‖y − x‖₁; x ← y. ONE job: the residual, dᵀx and eᵀx
-        // of the new iterate ride the materializing tasks as observe
-        // accumulators; ω comes from the PREVIOUS step's scalars via
-        // ω = 1 − α(eᵀx − dᵀx) (identical to 1 − ‖αPᵀx‖₁ in exact
-        // arithmetic — P is row-stochastic, so eᵀPᵀx = eᵀx − dᵀx).
-        if (!powerReady) frame = enterPower(frame)
-        val omega = 1.0 - alpha * (sxP - dtxP)
-        val om = GraftSqlInternals.stableLit(omega)
-        val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-        val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
-        val xNew = lit(alpha) * coalesce(col("y"), lit(0.0)) + om * vCol
-        val next = frame.select(carry :+ col("x").as("x_prev"): _*)
-          .join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-          .withColumn("x", xNew)
-          .observe("pw",
-            sum(abs(col("x") - col("x_prev"))).as("delta"),
-            sum(col("dang") * col("x")).as("dtx"),
-            sum(col("x")).as("sx"))
-          .select(carry :+ col("x"): _*)
-        val (t, observed) = GraftSqlInternals.truncateObserved(next)
-        prevHandle.foreach(_.handle.unpersist(false))
-        prevHandle = Some(t)
-        val row = observed("pw")
-        delta = row.getDouble(0)
-        dtxP = row.getDouble(1)
-        sxP = row.getDouble(2)
-        frame = t.df
+        // plain power step (ppagerank.cc:385-409) — PageRank.run's kernel,
+        // with ω from the PREVIOUS step's scalars via ω = 1 − α(eᵀx − dᵀx)
+        // (identical to 1 − ‖αPᵀx‖₁ in exact arithmetic — P is
+        // row-stochastic, so eᵀPᵀx = eᵀx − dᵀx)
+        if (!powerReady) {
+          // transition into the power kernel: measure dᵀx, eᵀx — ONE job
+          val r = it.step(IterativeKernel.Step(it.frame.select(carry :+ col("x"): _*),
+            Seq(sum(col("dang") * col("x")), sum(col("x")))))
+          dtxP = r(0)
+          sxP = r(1)
+          powerReady = true
+        }
+        val r = it.step(PageRank.powerStep(prep, it.frame, "x", carry, alpha,
+          1.0 - alpha * (sxP - dtxP), vCol))
+        dtxP = r(1)
+        sxP = r(2)
         sx = sxP
+        (r(0), sx)
       } else {
         // f = (α−β)y + (1−α)v (ppagerank.cc:412-421); f is FIXED across the
         // sweep, so dᵀf is one scalar computed from the recurrence seeds
-        var st = frame.withColumn("f",
+        it.frame = it.frame.withColumn("f",
           lit(alpha - beta) * col("y") + lit(1 - alpha) * vCol)
         // sums: eᵀy = eᵀx (B column-stochastic); eᵀf
         var sy = sx
-        var sf = (alpha - beta) * sy + (1 - alpha) * sv
+        val sf = (alpha - beta) * sy + (1 - alpha) * sv
         val dfD = (alpha - beta) * dy + (1 - alpha) * dv
         var innerIter = 0
-        var innerDelta = Double.MaxValue
         var exitedAtZero = false
         var continue = true
         var lastOdiff = Double.MaxValue
         while (continue && innerIter < cfg.maxInnerIter) {
-          // x ← βy + f; y ← Bx; δ_in = ‖f + βy_new − x‖₁ (ppagerank.cc:423-435)
-          // in ONE materializing job: dᵀx = β·dᵀy + dᵀf is known BEFORE the
-          // job (d is static, f fixed across the sweep — same scalar as the
-          // old measured sx − eᵀPᵀx form in exact arithmetic), so
-          // y_new = Pᵀx + (dᵀx)v is an in-job column and the inner residual,
-          // the outer residual δ = ‖x − αy − (1−α)v‖₁ (ppagerank.cc:456-465)
-          // and the next step's dᵀ(Pᵀx) all ride the observe — the old shape
-          // paid a second aggregation job per sweep step for the residuals
           val dtxK = beta * dy + dfD
           val sxInner = beta * sy + sf
-          val dtL = GraftSqlInternals.stableLit(dtxK)
-          val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
-          val yraw = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
-          val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-          val next = withX.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-            .withColumn("yc", coalesce(col("y"), lit(0.0)))
-            .withColumn("yn", col("yc") + dtL * vCol)
-            .observe("in",
-              sum(col("dang") * col("yc")).as("dyraw"),
-              sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
-              sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * vCol)).as("dout"))
-            .select(carry ++ Seq(col("f"), col("x"), col("yn").as("y")): _*)
-          val (t, observed) = GraftSqlInternals.truncateObserved(next)
-          prevHandle.foreach(_.handle.unpersist(false))
-          prevHandle = Some(t)
-          val row = observed("in")
-          dy = row.getDouble(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
-          innerDelta = row.getDouble(1)
-          lastOdiff = row.getDouble(2)
-          st = t.df
+          val r = it.step(innerStep(prep, it.frame, carry, alpha, beta, dtxK, vCol))
+          dy = r(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
+          lastOdiff = r(2)
           sy = sxInner // eᵀ(Bx) = eᵀx
           sx = sxInner
           innerIter += 1
-          if (innerDelta < cfg.eta) {
+          if (r(1) < cfg.eta) {
             if (innerIter == 1) { innerMode = false; exitedAtZero = true }
             continue = false
           }
         }
-        delta = lastOdiff
         if (exitedAtZero) {
           // x ← αy + (1−α)v (ppagerank.cc:467-477) before switching to power
           // (lazy projection over the cached sweep frame; the power
-          // transition job materializes it — dang rides along, so the
-          // transition needs no dangling join)
-          val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-          frame = st.select(carry :+
+          // transition job materializes it)
+          it.frame = it.frame.select(carry :+
             (lit(alpha) * col("y") + lit(1 - alpha) * vCol).as("x"): _*)
           sx = alpha * sy + (1 - alpha) * sv
           powerReady = false
-        } else {
-          frame = st
         }
+        (lastOdiff, sx)
       }
-      iter += 1
-      trace += IterMetric(runId, iter, delta, sx, (System.nanoTime() - t0) / 1000000L)
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          frame = graft.ingest.TableIO.commitSnapshotWithLineage(
-            frame.withColumn("im", lit(innerMode)),
-            s"$dir/$runId", runId, "iter_", iter).drop("im")
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty)
-            graft.ingest.TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
     }
 
     prep.close()
     // In inner mode the current iterate satisfies x with y = Bx; the rank
     // vector the solver returns is x (same convention as the reference,
     // which leaves the iterate in p).
-    val ranks = frame.select(col("id"), col("x").as("rank")).as[VertexRank]
-    (ranks, PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
+    (it.frame.select(col("id"), col("x").as("rank")).as[VertexRank], it.stats)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlInternals}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -36,19 +36,16 @@ object LabelPropagation {
     * label fixpoint was reached early).
     */
   def runWithStats(edges: Dataset[Edge], vertices: DataFrame,
-      rounds: Int = 5): (DataFrame, Int) = {
-    graft.util.ShuffleWidth.withWidth(edges.sparkSession,
-      edges.rdd.getNumPartitions) {
+      rounds: Int = 5): (DataFrame, Int) =
+    // stops at the first round that changes no label (fewer than 1 change)
+    IterativeKernel(edges, "lp", rounds, tol = 1.0) { it =>
     val adj = edges.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     adj.count()
 
-    var handle = GraftSqlInternals.truncate(
-      vertices.select(col("id"), col("id").as("label")))
-    var labels = handle.df
-    var r = 0
-    var changed = -1L
-    while (r < rounds && changed != 0L) {
+    it.start(vertices.select(col("id"), col("id").as("label")))
+    it.loop {
+      val labels = it.frame
       val votes = adj.join(labels, adj("src") === labels("id"))
         .groupBy(adj("dst").as("id"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -58,22 +55,15 @@ object LabelPropagation {
         .groupBy(col("id"))
         .agg(max(struct(col("n"), (-col("label")).as("neg"), col("label"))).as("w"))
         .select(col("id"), col("w.label").as("newlabel"))
-      val next = labels.join(winner, Seq("id"), "left")
-        .select(col("id"), col("label").as("oldlabel"),
-          coalesce(col("newlabel"), col("label")).as("label"))
-        .observe("lp", sum(when(col("label") =!= col("oldlabel"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("id"), col("label"))
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
-      // sum over an empty vertex domain observes NULL — treat as fixpoint
-      changed = Option(observed("lp").get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      handle.handle.unpersist(false)
-      handle = nextHandle
-      labels = nextHandle.df
-      r += 1
+      val changed = it.step(IterativeKernel.Step(
+        labels.join(winner, Seq("id"), "left")
+          .select(col("id"), col("label").as("oldlabel"),
+            coalesce(col("newlabel"), col("label")).as("label")),
+        Seq(sum(when(col("label") =!= col("oldlabel"), 1L).otherwise(0L)).as("changed")),
+        Seq(col("id"), col("label"))))(0)
+      (changed, 0.0)
     }
     adj.unpersist(false)
-    (labels, r)
-    } // withWidth
-  }
+    (it.frame, it.iterations)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -114,32 +114,66 @@ object PageRank {
       .agg(sum(col("weight") * col("rank")).as("y"))
   }
 
+  /** Dangling indicator and magnitude of an iterate row's rank, under
+    * either representation (`packed`: the sign carries the dangling bit).
+    */
+  private def dangOf(rank: Column, packed: Boolean): Column =
+    if (packed) when(rank < 0, 1.0).otherwise(0.0) else col("dang")
+  private def magOf(rank: Column, packed: Boolean): Column = if (packed) abs(rank) else rank
+
+  /** One power step (ppagerank.cc:301-329) as ONE job:
+    * x ← α·Pᵀx + ω·v over iterate column `rank` of `frame`, carrying the
+    * `carry` columns. The residual ‖xₖ₊₁ − xₖ‖₁ and the new iterate's dᵀx
+    * and eᵀx are observed as accumulator side-effects of the SAME tasks that
+    * materialize it (no dedicated aggregation stage, no read-back of the
+    * fresh cache) and feed the next step's ω. ω travels via
+    * GraftSqlInternals.stableLit (codegen references array), NOT an inlined
+    * literal: a changing literal would alter the generated source every
+    * iteration and force a Janino recompile of every stage touching it.
+    * `packed`: the dangling bit rides in the sign of `rank` (see `run`);
+    * otherwise `frame` carries `dang`.
+    */
+  private[graft] def powerStep(prep: Prepared, frame: DataFrame, rank: String,
+      carry: Seq[Column], alpha: Double, omega: Double, v: Column,
+      packed: Boolean = false): IterativeKernel.Step = {
+    val contrib = spmv(prep, frame.select(col("id"), magOf(col(rank), packed).as("rank")))
+      .withColumnRenamed("y", "yraw")
+    // the new magnitude is always positive; packed mode re-applies the
+    // (static) dangling sign carried by the previous rank value
+    val rankPos = lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
+      GraftSqlInternals.stableLit(omega) * v
+    val rankStored = if (packed)
+      when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
+    else col("rank_pos")
+    IterativeKernel.Step(
+      frame.select(carry :+ col(rank).as("rank_prev"): _*)
+        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
+        .withColumn("rank_pos", rankPos),
+      Seq(sum(abs(col("rank_pos") - magOf(col("rank_prev"), packed))).as("delta"),
+        sum(dangOf(col("rank_prev"), packed) * col("rank_pos")).as("dtx"),
+        sum(col("rank_pos")).as("sx")),
+      carry :+ rankStored.as(rank))
+  }
+
   /** Run from scratch or resume from the latest committed checkpoint under
     * cfg.checkpointDir (north-rule resumability).
     */
   def run(g: LinkGraph, cfg: PageRankConfig = PageRankConfig(),
       runId: String = "pr", resume: Boolean = false,
       personalization: Option[DataFrame] = None,
-      warmStart: Option[DataFrame] = None): (Dataset[VertexRank], PageRankStats) = {
+      warmStart: Option[DataFrame] = None): (Dataset[VertexRank], PageRankStats) =
+    IterativeKernel.ranks(g, runId, cfg.maxIter, cfg.tol,
+        IterativeKernel.Snapshots(cfg.checkpointDir, cfg.checkpointEvery)) { it =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.numVertices
-    require(n > 0, "empty vertex domain")
-    // iteration shuffles sized to the graph's own layout width (no-op at
-    // full scale; see ShuffleWidth)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
     val prep = prepare(g, cfg)
 
-    // static dangling indicator (C6 complement): dang=1 iff no out-edges —
-    // folded into the iterate frame once, so dᵀx is a free side-aggregate
-    val srcs = g.edges.select(col("src").as("id")).distinct()
-      .withColumn("nd", lit(1))
-    val base = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-
     // personalization v (default uniform 1/n); carried as a column when given
-    val vDf = personalization.map(_.select(col("id"), col("v").cast("double")))
-    val hasV = vDf.isDefined
+    val hasV = personalization.isDefined
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
+    // static dangling indicator, folded into the iterate frame once, so dᵀx
+    // is a free side-aggregate
+    val withV = IterativeKernel.base(g, personalization)
 
     // Iterate representation. Uniform teleport (the headline/maintenance
     // path): the dangling bit rides in the SIGN of the rank value and the
@@ -160,12 +194,6 @@ object PageRank {
     // ω = 1 − α(eᵀx − dᵀx) restores the total); the power method then
     // contracts from wherever the warm vector sits.
     def initialFrame(): DataFrame = {
-      val withV = vDf match {
-        case Some(v) => base.join(v, Seq("id"), "left")
-          .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
-        case None => base
-      }
-      val fallback = if (hasV) col("v") else lit(1.0 / n)
       val x0 = warmStart match {
         case Some(w0) =>
           // non-positive warm ranks are treated as missing: a sane previous
@@ -174,138 +202,60 @@ object PageRank {
           val w = w0.select(col("id"), col("rank").cast("double").as("rank_ws"))
           withV.join(w, Seq("id"), "left")
             .select(withV.columns.map(col).toSeq :+
-              when(col("rank_ws") > 0, col("rank_ws")).otherwise(fallback).as("rank"): _*)
+              when(col("rank_ws") > 0, col("rank_ws")).otherwise(vCol).as("rank"): _*)
         case None =>
-          withV.select(withV.columns.map(col).toSeq :+ fallback.as("rank"): _*)
+          withV.select(withV.columns.map(col).toSeq :+ vCol.as("rank"): _*)
       }
       if (packed) x0.select(col("id"),
         when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
       else x0
     }
 
-    var startIter = 0
-    var frame: DataFrame = (cfg.checkpointDir, resume) match {
-      case (Some(dir), true) =>
-        // north rule: a snapshot is only trusted after its per-partition
-        // lineage digest validates; corrupted/partial snapshots fall back
-        TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_") match {
-          case Some((k, snap)) =>
-            startIter = k
-            // migration: a pre-packing snapshot carries an explicit dang
-            // column — fold it into the sign on the way in. A rank of
-            // exactly 0.0 cannot carry the sign bit (-0.0 reads back as
-            // non-dangling): uniform-teleport iterates are strictly
-            // positive, so a zero rank means the snapshot came from a
-            // personalized/sparse-teleport run — refuse loudly rather than
-            // silently dropping dangling bits
-            if (packed && snap.columns.contains("dang")) {
-              val minRank = Option(
-                snap.agg(min(col("rank"))).head().get(0))
-                .map(_.asInstanceOf[Double]).getOrElse(0.0)
-              require(minRank > 0.0,
-                s"checkpoint under ${cfg.checkpointDir.get}/$runId carries " +
-                  s"non-positive ranks (min=$minRank): it was written by a " +
-                  "personalized or sparse-teleport run and cannot be folded " +
-                  "into the sign-packed uniform representation — resume it " +
-                  "with the same personalization, or restart")
-              snap.select(col("id"),
-                when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
-            } else snap
-          case None => initialFrame()
-        }
-      case _ => initialFrame()
-    }
-    var frameHandle = GraftSqlInternals.truncate(frame)
-    frame = frameHandle.df
-
-    // dangling indicator + magnitude of the CURRENT iterate row, under
-    // either representation
-    def dangOf(rank: Column): Column =
-      if (packed) when(rank < 0, 1.0).otherwise(0.0) else col("dang")
-    def magOf(rank: Column): Column = if (packed) abs(rank) else rank
+    // north rule: a snapshot is only trusted after its per-partition lineage
+    // digest validates; corrupted/partial snapshots fall back
+    it.start(it.resume(resume) { (snap, runDir) =>
+      // migration: a pre-packing snapshot carries an explicit dang column —
+      // fold it into the sign on the way in. A rank of exactly 0.0 cannot
+      // carry the sign bit (-0.0 reads back as non-dangling): uniform-
+      // teleport iterates are strictly positive, so a zero rank means the
+      // snapshot came from a personalized/sparse-teleport run — refuse
+      // loudly rather than silently dropping dangling bits
+      if (packed && snap.columns.contains("dang")) {
+        val minRank = IterativeKernel.measure(snap, min(col("rank")))(0)
+        require(minRank > 0.0,
+          s"checkpoint under $runDir carries " +
+            s"non-positive ranks (min=$minRank): it was written by a " +
+            "personalized or sparse-teleport run and cannot be folded " +
+            "into the sign-packed uniform representation — resume it " +
+            "with the same personalization, or restart")
+        snap.select(col("id"),
+          when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
+      } else snap
+    }.getOrElse(initialFrame()))
 
     // scalars for iteration 0 / resume: dᵀx and eᵀx (one extra job, once)
-    val r0 = frame.agg(sum(dangOf(col("rank")) * magOf(col("rank"))),
-      sum(magOf(col("rank")))).head()
-    var dtx = r0.getDouble(0)
-    var sx = r0.getDouble(1)
+    val r0 = IterativeKernel.measure(it.frame,
+      sum(dangOf(col("rank"), packed) * magOf(col("rank"), packed)),
+      sum(magOf(col("rank"), packed)))
+    var dtx = r0(0)
+    var sx = r0(1)
 
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var iter = startIter
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
+    val carry = if (packed) Seq(col("id"))
+      else Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
+    it.loop {
       // ω = 1 − ‖αPᵀx‖₁ = 1 − α·(eᵀx − dᵀx), with eᵀx and dᵀx measured as
-      // side scalars of the previous iteration's aggregate — same
-      // self-correcting fold as the reference (ppagerank.cc:307-315).
-      // ω travels via GraftSqlInternals.stableLit (codegen references
-      // array), NOT an inlined literal: a changing literal would alter the
-      // generated source every iteration and force a Janino recompile of
-      // every stage touching it (tens of ms serial per stage).
+      // side scalars of the previous iteration's job — same self-correcting
+      // fold as the reference (ppagerank.cc:307-315)
       val omega = 1.0 - cfg.alpha * (sx - dtx)
-      val contrib = spmv(prep,
-          frame.select(col("id"), magOf(col("rank")).as("rank")))
-        .withColumnRenamed("y", "yraw")
-      val carry = if (packed) Seq(col("id"))
-        else Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-      // the new magnitude is always positive; packed mode re-applies the
-      // (static) dangling sign carried by the previous rank value
-      val rankPos = lit(cfg.alpha) * coalesce(col("yraw"), lit(0.0)) +
-        GraftSqlInternals.stableLit(omega) * vCol
-      val rankStored = if (packed)
-        when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
-      else col("rank_pos")
-      val next = frame.select(carry :+ col("rank").as("rank_prev"): _*)
-        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("rank_pos", rankPos)
-        // residual ‖xₖ₊₁−xₖ‖₁, next dᵀx and eᵀx are observed as accumulator
-        // side-effects of the SAME tasks that materialize the iterate below
-        // (no dedicated aggregation stage, no read-back of the fresh cache)
-        .observe("it",
-          sum(abs(col("rank_pos") - magOf(col("rank_prev")))).as("delta"),
-          sum(dangOf(col("rank_prev")) * col("rank_pos")).as("dtx"),
-          sum(col("rank_pos")).as("sx"))
-        .select(carry :+ rankStored.as("rank"): _*)
-      // eager lineage truncation + metrics: ONE job per iteration; the
-      // previous iterate's blocks are unpersisted explicitly afterwards
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
-
-      val row = observed("it")
-      delta = row.getDouble(0)
-      dtx = row.getDouble(1)
-      sx = row.getDouble(2)
-      val rankSum = sx
-      iter += 1
-      trace += IterMetric(runId, iter, delta, rankSum, (System.nanoTime() - t0) / 1000000L)
-
-      frameHandle.handle.unpersist(false)
-      frameHandle = nextHandle
-      frame = nextHandle.df
-
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          // snapshot + per-partition lineage sidecar in one commit protocol
-          frame = TableIO.commitSnapshotWithLineage(
-            frame, s"$dir/$runId", runId, "iter_", iter)
-          // K1 convergence-trace sink: append only not-yet-flushed rows
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty) TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+      val r = it.step(powerStep(prep, it.frame, "rank", carry, cfg.alpha, omega, vCol, packed))
+      dtx = r(1)
+      sx = r(2)
+      (r(0), sx)
     }
-    prep.close() // frame is lineage-truncated — independent of prep's caches
+    prep.close() // the iterate is lineage-truncated — independent of prep's caches
 
-    (frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank],
-      PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
-  }
+    (it.frame.select(col("id"), magOf(col("rank"), packed).as("rank")).as[VertexRank], it.stats)
+    }
 
   /** Batched multi-seed personalized PageRank: k PPR vectors (teleport
     * vector = indicator of one seed vertex each) solved SIMULTANEOUSLY as k
@@ -325,17 +275,15 @@ object PageRank {
       cfg: PageRankConfig = PageRankConfig(),
       runId: String = "ppr", resume: Boolean = false): (DataFrame, PageRankStats) = {
     val spark = g.edges.sparkSession
-    import spark.implicits._
     val k = seeds.size
     require(k >= 1 && k <= 64, s"1..64 seeds supported, got $k")
     require(seeds.distinct.size == k, "duplicate seeds")
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    // format marker: columns are seed-named (resume validates against it;
+    // see the legacy-index-named refusal below)
+    val snapshots = IterativeKernel.Snapshots(cfg.checkpointDir, cfg.checkpointEvery,
+      committed = runDir => TableIO.writeMarker(spark, s"$runDir/_seedfmt", "seed-named"))
+    IterativeKernel.ranks(g, runId, cfg.maxIter, cfg.tol, snapshots) { it =>
     val prep = prepare(g, cfg)
-
-    val srcs = g.edges.select(col("src").as("id")).distinct()
-      .withColumn("nd", lit(1))
-    val base = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
     def vCol(j: Int): Column =
       when(col("id") === seeds(j), 1.0).otherwise(0.0)
     // rank columns are named BY SEED ID (r<seed>, not r<index>): the column
@@ -346,57 +294,49 @@ object PageRank {
 
     // Resume (north rule, at parity with the single-vector kernel): the k
     // rank columns are the whole state; per-seed scalars are re-measured.
-    var startIter = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_")
-          .map { case (kk, snap) =>
-            val want = seeds.indices.map(rc).toSet
-            val got = snap.columns.filter(c => c != "id" && c != "dang").toSet
-            // checkpoint format versioning: pre-marker snapshots may be
-            // INDEX-named (r0..r(k-1), column order = seed order) — for the
-            // one seed set where that is indistinguishable from seed-naming
-            // ({0..k-1}), binding by name could silently swap per-seed
-            // state, so refuse instead of guessing
-            val fmt = TableIO.readMarker(spark, s"$dir/$runId/_seedfmt")
-            val indexNamed = seeds.indices.map(j => s"r$j").toSet
-            if (fmt.isEmpty && got == indexNamed) {
-              if (want == indexNamed)
-                throw new IllegalArgumentException(
-                  s"checkpoint under $dir/$runId predates the _seedfmt marker " +
-                    "and its columns match BOTH the legacy index-named and the " +
-                    "seed-named layout (seed set = 0..k-1): the column-to-seed " +
-                    "binding cannot be validated — restart the solve, or write " +
-                    "a '_seedfmt: seed-named' marker after verifying the " +
-                    "binding by hand")
-              else
-                throw new IllegalArgumentException(
-                  s"checkpoint under $dir/$runId is a legacy INDEX-named " +
-                    s"multi-seed snapshot (columns r0..r${k - 1}): column " +
-                    "order, not seed identity, defined its binding — it " +
-                    "cannot be resumed under seed-named validation; restart " +
-                    "the solve")
-            }
-            require(got == want,
-              s"checkpoint under $dir/$runId carries seed columns " +
-                s"${got.toSeq.sorted.mkString(",")} but seeds " +
-                s"${seeds.mkString(",")} were requested — seed set must match")
-            startIter = kk
-            snap
-          }
+    val resumed = it.resume(resume) { (snap, runDir) =>
+      val want = seeds.indices.map(rc).toSet
+      val got = snap.columns.filter(c => c != "id" && c != "dang").toSet
+      // checkpoint format versioning: pre-marker snapshots may be
+      // INDEX-named (r0..r(k-1), column order = seed order) — for the
+      // one seed set where that is indistinguishable from seed-naming
+      // ({0..k-1}), binding by name could silently swap per-seed
+      // state, so refuse instead of guessing
+      val fmt = TableIO.readMarker(spark, s"$runDir/_seedfmt")
+      val indexNamed = seeds.indices.map(j => s"r$j").toSet
+      if (fmt.isEmpty && got == indexNamed) {
+        if (want == indexNamed)
+          throw new IllegalArgumentException(
+            s"checkpoint under $runDir predates the _seedfmt marker " +
+              "and its columns match BOTH the legacy index-named and the " +
+              "seed-named layout (seed set = 0..k-1): the column-to-seed " +
+              "binding cannot be validated — restart the solve, or write " +
+              "a '_seedfmt: seed-named' marker after verifying the " +
+              "binding by hand")
+        else
+          throw new IllegalArgumentException(
+            s"checkpoint under $runDir is a legacy INDEX-named " +
+              s"multi-seed snapshot (columns r0..r${k - 1}): column " +
+              "order, not seed identity, defined its binding — it " +
+              "cannot be resumed under seed-named validation; restart " +
+              "the solve")
       }
-    } else None
+      require(got == want,
+        s"checkpoint under $runDir carries seed columns " +
+          s"${got.toSeq.sorted.mkString(",")} but seeds " +
+          s"${seeds.mkString(",")} were requested — seed set must match")
+      snap
+    }
 
     // x₀_j = v_j (the reference's personalized start, ppagerank.cc:291-295)
-    var frameHandle = GraftSqlInternals.truncate(resumed.getOrElse(base.select(
+    it.start(resumed.getOrElse(IterativeKernel.base(g).select(
       col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)))
-    var frame = frameHandle.df
     // per-seed scalars: x₀_j sums to 1 iff the seed is in the vertex domain
-    val aggCols0 = Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
-      Seq.tabulate(k)(j => sum(col(rc(j))))
-    val r0 = frame.agg(aggCols0.head, aggCols0.tail: _*).head()
-    val dtx = Array.tabulate(k)(j => r0.getDouble(j))
-    val sx = Array.tabulate(k)(j => r0.getDouble(k + j))
+    val r0 = IterativeKernel.measure(it.frame,
+      Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
+        Seq.tabulate(k)(j => sum(col(rc(j)))): _*)
+    val dtx = r0.take(k)
+    val sx = r0.drop(k)
     // a seed outside the vertex domain would make x₀ ≡ 0 for that column:
     // the first residual is 0 and the solver would "converge" to a silent
     // all-zero PPR vector — fail loudly instead. (On resume the columns are
@@ -408,72 +348,41 @@ object PageRank {
         s"seed(s) not in vertex domain: ${missing.mkString(", ")}")
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var iter = startIter
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
+    it.loop {
       val omega = Array.tabulate(k)(j => 1.0 - cfg.alpha * (sx(j) - dtx(j)))
       // one SpMV join for ALL seeds: k sums per dst in one hash aggregate
-      val x = frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
+      val x = it.frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
         .hint("shuffle_hash")
       val contrib = prep.joinEdges.join(x, prep.joinEdges("src") === x("id"))
         .groupBy(col("dst").as("cid"))
         .agg(sum(col("weight") * col(rc(0))).as("y0"),
           Seq.tabulate(k - 1)(j =>
             sum(col("weight") * col(rc(j + 1))).as(s"y${j + 1}")): _*)
-      val joined = frame.select(
+      val joined = it.frame.select(
         col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j)).as(s"p$j")): _*)
         .join(contrib.hint("shuffle_hash"), col("id") === col("cid"), "left")
       val rankCols = Seq.tabulate(k) { j =>
         (lit(cfg.alpha) * coalesce(col(s"y$j"), lit(0.0)) +
           GraftSqlInternals.stableLit(omega(j)) * vCol(j)).as(rc(j))
       }
-      val metricCols =
+      val r = it.step(IterativeKernel.Step(
+        joined.select(col("id") +: col("dang") +:
+          (rankCols ++ Seq.tabulate(k)(j => col(s"p$j"))): _*),
         Seq.tabulate(k)(j => sum(abs(col(rc(j)) - col(s"p$j"))).as(s"d$j")) ++
-        Seq.tabulate(k)(j => sum(col("dang") * col(rc(j))).as(s"m$j")) ++
-        Seq.tabulate(k)(j => sum(col(rc(j))).as(s"s$j"))
-      val next = joined.select(col("id") +: col("dang") +:
-          (rankCols ++ Seq.tabulate(k)(j => col(s"p$j"))): _*)
-        .observe("it", metricCols.head, metricCols.tail: _*)
-        .select(col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j))): _*)
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
-      val row = observed("it")
-      delta = (0 until k).map(j => row.getDouble(j)).max
-      for (j <- 0 until k) { dtx(j) = row.getDouble(k + j); sx(j) = row.getDouble(2 * k + j) }
-      iter += 1
-      trace += IterMetric(runId, iter, delta,
-        (0 until k).map(j => sx(j)).sum / k, (System.nanoTime() - t0) / 1000000L)
-      frameHandle.handle.unpersist(false)
-      frameHandle = nextHandle
-      frame = nextHandle.df
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          frame = TableIO.commitSnapshotWithLineage(
-            frame, s"$dir/$runId", runId, "iter_", iter)
-          // format marker: columns are seed-named (resume validates against
-          // it; see the legacy-index-named refusal above)
-          TableIO.writeMarker(spark, s"$dir/$runId/_seedfmt", "seed-named")
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty) TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+          Seq.tabulate(k)(j => sum(col("dang") * col(rc(j))).as(s"m$j")) ++
+          Seq.tabulate(k)(j => sum(col(rc(j))).as(s"s$j")),
+        col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j)))))
+      for (j <- 0 until k) { dtx(j) = r(k + j); sx(j) = r(2 * k + j) }
+      ((0 until k).map(j => r(j)).max, sx.sum / k)
     }
 
     prep.close()
 
     // long form (id, seed, rank)
-    val stackArgs = seeds.zipWithIndex
-      .map { case (s, j) => s"${s}L, `r$s`" }.mkString(", ")
-    val long = frame.select(col("id"),
+    val stackArgs = seeds.map(s => s"${s}L, `r$s`").mkString(", ")
+    val long = it.frame.select(col("id"),
       expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank")))
-    (long, PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
+    (long, it.stats)
+    }
   }
 }

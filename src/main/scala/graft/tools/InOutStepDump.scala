@@ -4,16 +4,16 @@ import org.apache.spark.sql.{GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.TestdataGraph
-import graft.graph.PageRank
+import graft.graph.{InOutPageRank, IterativeKernel, PageRank}
 import graft.model.PageRankConfig
 
-/** Dumps the physical plan of ONE inner-outer power-phase step job as
-  * restructured in round 6 (single materializing job: SpMV join + iterate
-  * join + observe), for the plans/r06 evidence. Args: <outFile>
+/** Dumps the physical plan of ONE inner-outer power-phase step job (single
+  * materializing job: SpMV join + iterate join + observe, built by
+  * PageRank.powerStep) for the plans/r06 evidence. Args: <outFile>
   * [<innerOutFile>] — the optional second file gets the INNER-sweep step
-  * job's plan (the analytic-dᵀx single-job form: y_new in-job via a
-  * stableLit dᵀx known before the job, inner+outer residuals and the next
-  * dᵀ(Pᵀx) on the observe).
+  * job's plan (InOutPageRank.innerStep: y_new in-job via a stableLit dᵀx
+  * known before the job, inner+outer residuals and the next dᵀ(Pᵀx) on the
+  * observe).
   */
 object InOutStepDump {
   def main(args: Array[String]): Unit = {
@@ -29,54 +29,27 @@ object InOutStepDump {
     spark.sparkContext.setLogLevel("WARN")
     val g = TestdataGraph.linkGraph(spark, sfDir)
     graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+      // both step plans come from the solvers' own step builders, over a
+      // cached frame with representative scalar values
       val prep = PageRank.prepare(g, PageRankConfig())
-      val srcs = g.edges.select(col("src").as("id")).distinct().withColumn("nd", lit(1))
-      val base = g.vertices.join(srcs, Seq("id"), "left")
-        .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-        .withColumn("x", lit(1.0 / g.numVertices))
-      val t0 = GraftSqlInternals.truncate(base)
-      t0.handle.count()
-      val frame = t0.df
       val vCol = lit(1.0 / g.numVertices)
-      val om = GraftSqlInternals.stableLit(0.15)
-      val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
-      val next = frame.select(col("id"), col("dang"), col("x").as("x_prev"))
-        .join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("x", lit(0.85) * coalesce(col("y"), lit(0.0)) + om * vCol)
-        .observe("pw",
-          sum(abs(col("x") - col("x_prev"))).as("delta"),
-          sum(col("dang") * col("x")).as("dtx"),
-          sum(col("x")).as("sx"))
-        .select(col("id"), col("dang"), col("x"))
-      val plan = next.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-        plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"[dump] wrote $outFile (${plan.length} chars)")
-
+      val carry = Seq(col("id"), col("dang"))
+      val t0 = GraftSqlInternals.truncate(IterativeKernel.base(g).withColumn("x", vCol))
+      t0.handle.count()
+      def write(file: String, step: IterativeKernel.Step): Unit = {
+        val plan = step.plan.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.write(java.nio.file.Paths.get(file),
+          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        println(s"[dump] wrote $file (${plan.length} chars)")
+      }
+      write(outFile, PageRank.powerStep(prep, t0.df, "x", carry, 0.85, 0.15, vCol))
       args.drop(1).headOption.foreach { innerOut =>
-        // the inner-sweep step job (InOutPageRank inner branch, round-6
-        // single-job form), with representative scalar values
-        val alpha = 0.85; val beta = alpha / 2
+        val alpha = 0.85
         val st = t0.df
           .withColumn("y", col("x")) // stand-in y column of the sweep frame
-          .withColumn("f", lit(alpha - beta) * col("x") + lit(1 - alpha) * vCol)
-        val dtL = GraftSqlInternals.stableLit(0.01)
-        val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
-        val yr2 = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
-        val inner = withX.join(yr2.hint("shuffle_hash"), Seq("id"), "left")
-          .withColumn("yc", coalesce(col("y"), lit(0.0)))
-          .withColumn("yn", col("yc") + dtL * vCol)
-          .observe("in",
-            sum(col("dang") * col("yc")).as("dyraw"),
-            sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
-            sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * vCol)).as("dout"))
-          .select(col("id"), col("dang"), col("f"), col("x"), col("yn").as("y"))
-        val p2 = inner.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(java.nio.file.Paths.get(innerOut),
-          p2.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[dump] wrote $innerOut (${p2.length} chars)")
+          .withColumn("f", lit(alpha / 2) * col("x") + lit(1 - alpha) * vCol)
+        write(innerOut, InOutPageRank.innerStep(prep, st, carry, alpha, alpha / 2, 0.01, vCol))
       }
     }
     spark.stop()

@@ -46,19 +46,12 @@ object PerfProbe {
     g.edges.count()
 
     if (doExplain) {
-      import org.apache.spark.sql.GraftSqlInternals
       val prep = PageRank.prepare(g, PageRankConfig())
-      val frame0 = GraftSqlInternals.truncate(
-        g.vertices.withColumn("dang", lit(0.0)).withColumn("rank", lit(1.0 / g.numVertices))).df
-      val contrib = PageRank.spmv(prep, frame0.select(col("id"), col("rank")))
-        .withColumnRenamed("y", "yraw")
-      val next = frame0.select(col("id"), col("dang"), col("rank").as("rank_prev"))
-        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("rank", lit(0.85) * coalesce(col("yraw"), lit(0.0)) + lit(0.1))
-        .select(col("id"), col("dang"), col("rank"),
-          abs(col("rank") - col("rank_prev")).as("diff"))
+      val frame0 = org.apache.spark.sql.GraftSqlInternals.truncate(
+        g.vertices.withColumn("rank", lit(1.0 / g.numVertices))).df
       println("=== full iteration plan ===")
-      next.explain("formatted")
+      PageRank.powerStep(prep, frame0, "rank", Seq(col("id")), 0.85, 0.15,
+        lit(1.0 / g.numVertices), packed = true).plan.explain("formatted")
     }
 
     val stageAgg = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 import graft.TestdataGraph
-import graft.graph.PageRank
+import graft.graph.{ArnoldiPageRank, IterativeKernel, PageRank}
 import graft.model.PageRankConfig
 
 /** Dumps the physical plan of one Arnoldi-style step job (SpMV + join-back +
@@ -28,24 +28,14 @@ object PlanDump {
     println(s"edges partitions = ${g.edges.rdd.getNumPartitions}")
     graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
       val prep = PageRank.prepare(g, PageRankConfig())
-      val base = g.vertices
-        .join(g.edges.select(col("src").as("id")).distinct()
-          .withColumn("nd", lit(1)), Seq("id"), "left")
-        .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-        .withColumn("v0", lit(1.0))
-      val tr0 = GraftSqlInternals.truncate(base)
+      val tr0 = GraftSqlInternals.truncate(IterativeKernel.base(g).withColumn("v0", lit(1.0)))
       tr0.handle.count()
       val frame = tr0.df
       println("=== frame (truncated) partitioning ===")
       println(frame.queryExecution.executedPlan.outputPartitioning)
-      val yraw = PageRank.spmv(prep,
-        frame.select(col("id"), col("v0").as("rank"))).withColumnRenamed("y", "yraw")
-      val step = frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("w", lit(0.85) * coalesce(col("yraw"), lit(0.0)) + lit(0.1))
-        .drop("yraw")
-        .observe("dots", sum(col("v0") * col("w")), sum(col("w") * col("w")))
       println("=== one Arnoldi step plan ===")
-      step.explain("formatted")
+      ArnoldiPageRank.basisStep(prep, frame, 0, 0.85, g.numVertices.toDouble, 0.0,
+        lit(1.0 / g.numVertices), sums = false).plan.explain("formatted")
     }
     spark.stop()
   }

@@ -103,18 +103,6 @@ object GraftSqlInternals {
 
   final case class Truncated(df: DataFrame, handle: RDD[_])
 
-  /** Escape hatch for A/B measurement: GRAFT_ROW_BLOCKS=0 restores the
-    * per-row-copy cache representation.
-    */
-  private val useRowBlocks: Boolean =
-    !sys.env.get("GRAFT_ROW_BLOCKS").contains("0")
-
-  /** A/B hatch: GRAFT_FIXED_STRIDE=0 forces the generic chunk layout even
-    * for fixed-width null-free frames.
-    */
-  private val useFixedStride: Boolean =
-    !sys.env.get("GRAFT_FIXED_STRIDE").contains("0")
-
   private val ByteArrayOffset =
     org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
 
@@ -139,7 +127,7 @@ object GraftSqlInternals {
       private val nFields = types.length
       // fixed-stride eligible: every field a single 8-byte slot (no
       // variable-length region), and ≤64 fields so the bitset is one word
-      private val fixedEligible = useFixedStride && nFields <= 64 &&
+      private val fixedEligible = nFields <= 64 &&
         types.forall(org.apache.spark.sql.catalyst.expressions.UnsafeRow.isFixedLength)
       private val fixedStride = 8 + 8 * nFields // bitset word + slots
       private var demoted = false // odd-sized row seen → generic from there on
@@ -236,31 +224,21 @@ object GraftSqlInternals {
     val spark = cdf.sparkSession
     val qe = cdf.queryExecution
     val nFields = cdf.schema.length
-    if (useRowBlocks) {
-      val src = qe.toRdd
-      val types = cdf.schema.fields.map(_.dataType)
-      // row buffers may be reused by the producing operator — irrelevant
-      // here, the bytes are copied into the chunk immediately
-      val chunks = src.mapPartitions(packPartition(_, types),
-        preservesPartitioning = true)
-      chunks.persist(level)
-      chunks.localCheckpoint()
-      if (eagerCount) chunks.count()
-      val rows = chunks.mapPartitions(unpackChunks(_, nFields),
-        preservesPartitioning = true)
-      val logical = LogicalRDD.fromDataset(rows, cdf, isStreaming = false)
-      Truncated(CDataset.ofRows(spark, logical), chunks)
-    } else {
-      val rdd = qe.toRdd.map(_.copy())
-      rdd.persist(level)
-      // truncate the RDD lineage too: persist alone keeps the parent-RDD
-      // object graph alive, which deepens every iteration until the
-      // scheduler or task deserializer recurses into a StackOverflowError
-      rdd.localCheckpoint()
-      if (eagerCount) rdd.count()
-      val logical = LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
-      Truncated(CDataset.ofRows(spark, logical), rdd)
-    }
+    val types = cdf.schema.fields.map(_.dataType)
+    // row buffers may be reused by the producing operator — irrelevant
+    // here, the bytes are copied into the chunk immediately
+    val chunks = qe.toRdd.mapPartitions(packPartition(_, types),
+      preservesPartitioning = true)
+    chunks.persist(level)
+    // truncate the RDD lineage too: persist alone keeps the parent-RDD
+    // object graph alive, which deepens every iteration until the
+    // scheduler or task deserializer recurses into a StackOverflowError
+    chunks.localCheckpoint()
+    if (eagerCount) chunks.count()
+    val rows = chunks.mapPartitions(unpackChunks(_, nFields),
+      preservesPartitioning = true)
+    val logical = LogicalRDD.fromDataset(rows, cdf, isStreaming = false)
+    Truncated(CDataset.ofRows(spark, logical), chunks)
   }
 
   def truncate(df: DataFrame,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.graph.{ArnoldiPageRank, InOutPageRank, PageRank}
+import graft.graph.{ArnoldiPageRank, ConnectedComponents, InOutPageRank, LabelPropagation, PageRank}
 import graft.model.PageRankConfig
 
 /** The reference exposes three algorithms (-alg power|inout|arnoldi,
@@ -110,16 +110,64 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
   test("solvers do not leak cached blocks across iterations/restarts") {
     val (n, edges) = GraphFixtures.g2
     val g = GraphFixtures.linkGraph(spark, n, edges)
-    // warm up (graph prep persists a fixed set of frames)
-    InOutPageRank.run(g, InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-6, maxIter = 50))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    InOutPageRank.run(g, InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-10, maxIter = 200))
-    ArnoldiPageRank.run(g, ArnoldiPageRank.ArnoldiConfig(alpha = 0.85, tol = 1e-10,
-      k = 6, maxRestarts = 40))
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // rolling truncation retires every intermediate; only O(1) live handles
-    // (final iterates) may remain per solver run
-    assert(after - before <= 4, s"cached blocks grew $before -> $after")
+    val cfg = PageRankConfig(alpha = 0.85, tol = 1e-10, maxIter = 200)
+    val solves: Seq[(String, () => Any)] = Seq(
+      "PageRank.run" -> (() => PageRank.run(g, cfg)),
+      "PageRank.runMultiSeed" -> (() => PageRank.runMultiSeed(g, Seq(0L, 3L), cfg)),
+      "InOutPageRank.run" -> (() => InOutPageRank.run(g,
+        InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-10, maxIter = 200))),
+      "ArnoldiPageRank.run" -> (() => ArnoldiPageRank.run(g,
+        ArnoldiPageRank.ArnoldiConfig(alpha = 0.85, tol = 1e-10, k = 6, maxRestarts = 40))),
+      "ConnectedComponents.run" -> (() => ConnectedComponents.run(g.edges, g.vertices)),
+      "LabelPropagation.run" -> (() => LabelPropagation.runWithStats(g.edges, g.vertices, 5)))
+    // Spark jobs per solve as measured by this test at commit 0667ca0, the
+    // last commit before the solvers shared IterativeKernel
+    val jobsAtParent = Map[String, Int](
+      "PageRank.run" -> 583,
+      "PageRank.runMultiSeed" -> 587,
+      "InOutPageRank.run" -> 497,
+      "ArnoldiPageRank.run" -> 19,
+      "ConnectedComponents.run" -> 20,
+      "LabelPropagation.run" -> 31)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try for ((name, solve) <- solves) {
+      solve() // warm up (graph prep persists a fixed set of frames)
+      val before = sc.getPersistentRDDs.size
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      solve()
+      org.apache.spark.ListenerBusDrain(sc)
+      val count = jobs.get
+      val after = sc.getPersistentRDDs.size
+      info(s"$name: $count jobs")
+      // rolling truncation retires every intermediate; only the final
+      // iterate (plus at most one more handle) may stay live per solve
+      assert(after - before <= 2, s"$name: cached blocks grew $before -> $after")
+      assert(count <= jobsAtParent(name),
+        s"$name: $count jobs per solve, ${jobsAtParent(name)} at the parent")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("empty vertex domain: rank solvers refuse it, CC and LP return no rows") {
+    val g = GraphFixtures.linkGraph(spark, 0, Seq.empty)
+    val rankSolves: Seq[(String, () => Any)] = Seq(
+      "PageRank.run" -> (() => PageRank.run(g)),
+      "PageRank.runMultiSeed" -> (() => PageRank.runMultiSeed(g, Seq(0L))),
+      "InOutPageRank.run" -> (() => InOutPageRank.run(g)),
+      "ArnoldiPageRank.run" -> (() => ArnoldiPageRank.run(g)))
+    for ((name, solve) <- rankSolves) {
+      val e = intercept[IllegalArgumentException](solve())
+      assert(e.getMessage.contains("empty vertex domain"), s"$name: ${e.getMessage}")
+    }
+    assert(ConnectedComponents.run(g.edges, g.vertices).isEmpty)
+    val (labels, rounds) = LabelPropagation.runWithStats(g.edges, g.vertices)
+    assert(labels.isEmpty && rounds == 1)
   }
 
   test("inout checkpoint + resume reproduces the uninterrupted result (kill-and-resume)") {
