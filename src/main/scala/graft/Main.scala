@@ -86,21 +86,7 @@ object Main {
         s"${stats.newVertices} new vertices")
     }
 
-    // ---- load + derive + normalize ONCE (ppagerank_main.cc:131-136, 408) ----
-    val g = if (mSource.startsWith("edges:"))
-      graft.ingest.EdgeStore.read(spark, mSource.stripPrefix("edges:"))
-    else {
-      val turns = if (mSource.startsWith("synth:"))
-        TranscriptGen.generate(spark, mSource.stripPrefix("synth:").toLong)
-      else {
-        import spark.implicits._
-        spark.read.parquet(mSource).as[graft.model.Turn]
-      }
-      // -trans (ppagerank_main.cc:121-122): PageRank over incoming links —
-      // the edge list is transposed before normalization, which is the
-      // reference's colsum + right-diagonal-scale path (ppagerank.cc:183-209)
-      GraphOps.fromTranscripts(turns, transpose = opts.flag("trans"))
-    }
+    val g = loadGraph(spark, mSource, opts)
     // durable CSR-like layout for later `-m edges:<dir>` runs
     opts.str("saveedges").filter(_.nonEmpty).foreach { p =>
       graft.ingest.EdgeStore.write(g, p)
@@ -126,6 +112,25 @@ object Main {
     } else runOne(spark, g, opts)
     spark.stop()
   }
+
+  /** Loads, derives and normalizes the `-m` source ONCE
+    * (ppagerank_main.cc:131-136, 408).
+    */
+  def loadGraph(spark: SparkSession, mSource: String, o: Options): LinkGraph =
+    if (mSource.startsWith("edges:"))
+      graft.ingest.EdgeStore.read(spark, mSource.stripPrefix("edges:"))
+    else {
+      val turns = if (mSource.startsWith("synth:"))
+        TranscriptGen.generate(spark, mSource.stripPrefix("synth:").toLong)
+      else {
+        import spark.implicits._
+        spark.read.parquet(mSource).as[graft.model.Turn]
+      }
+      // -trans (ppagerank_main.cc:121-122): PageRank over incoming links —
+      // the edge list is transposed before normalization, which is the
+      // reference's colsum + right-diagonal-scale path (ppagerank.cc:183-209)
+      GraphOps.fromTranscripts(turns, transpose = o.flag("trans"))
+    }
 
   def runOne(spark: SparkSession, g: LinkGraph, o: Options): Unit = {
     val alpha = o.dbl("alpha", 0.85)     // ppagerank.cc:68-69

@@ -101,29 +101,27 @@ object EdgeStore {
     * the `_meta.txt` sidecar (driver-side read, no Spark job); falls back to
     * the meta parquet for stores written before the sidecar existed.
     */
-  private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val (fs, sp) = hfs(spark, s"$path/_meta.txt")
-    if (fs.exists(sp)) {
-      val in = fs.open(sp)
-      val body = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val kv = body.linesIterator.flatMap(_.split("=", 2) match {
-        case Array(k, v) => Some(k.trim -> v.trim)
-        case _ => None
-      }).toMap
-      (kv("buckets").toInt, kv("layout").toInt)
-    } else {
-      val (_, p) = hfs(spark, s"$path/meta")
-      if (!fs.exists(p)) (64, 1)
-      else {
-        val meta = spark.read.parquet(p.toString)
-        val hasLayout = meta.columns.contains("layout")
-        val row = meta.select(
-          col("buckets") +: (if (hasLayout) Seq(col("layout")) else Nil): _*).head()
-        (row.getInt(0), if (hasLayout) row.getInt(1) else 1)
-      }
+  private def readMeta(spark: SparkSession, path: String): (Int, Int) =
+    readSmallFile(spark, s"$path/_meta.txt") match {
+      case Some(body) =>
+        val kv = body.linesIterator.flatMap(_.split("=", 2) match {
+          case Array(k, v) => Some(k.trim -> v.trim)
+          case _ => None
+        }).toMap
+        def field(k: String): Int = kv.get(k).flatMap(_.toIntOption).getOrElse(
+          malformed(s"$path/_meta.txt", body, s"no integer $k="))
+        (field("buckets"), field("layout"))
+      case None =>
+        val (fs, p) = hfs(spark, s"$path/meta")
+        if (!fs.exists(p)) (64, 1)
+        else {
+          val meta = spark.read.parquet(p.toString)
+          val hasLayout = meta.columns.contains("layout")
+          val row = meta.select(
+            col("buckets") +: (if (hasLayout) Seq(col("layout")) else Nil): _*).head()
+          (row.getInt(0), if (hasLayout) row.getInt(1) else 1)
+        }
     }
-  }
 
   /** Total bytes under the store's data tree(s) — driver-side FS metadata
     * only, no Spark job. Sizes the merge's shuffle width (guide: make
@@ -261,16 +259,10 @@ object EdgeStore {
   /** Tag recorded by the last completed merge (None for never-merged or
     * pre-tag stores).
     */
-  def lastMergeTag(spark: SparkSession, path: String): Option[Long] = {
-    val (fs, p) = hfs(spark, s"$path/_last_merge_tag")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+  def lastMergeTag(spark: SparkSession, path: String): Option[Long] =
+    readSmallFile(spark, s"$path/_last_merge_tag").map(body =>
+      body.trim.toLongOption.getOrElse(
+        malformed(s"$path/_last_merge_tag", body, "tag is not an integer")))
 
   /** Run identity recorded alongside the last merge tag (None for stores
     * merged without one). The tag (a streaming batchId) is only a valid
@@ -279,16 +271,25 @@ object EdgeStore {
     * skips genuinely new batches — callers scope the cursor by recording
     * the run identity with it (IncrementalRank.maintain).
     */
-  def lastMergeRun(spark: SparkSession, path: String): Option[String] = {
-    val (fs, p) = hfs(spark, s"$path/_last_merge_run")
+  def lastMergeRun(spark: SparkSession, path: String): Option[String] =
+    readSmallFile(spark, s"$path/_last_merge_run").map(_.trim)
+
+  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
+    val (fs, p) = hfs(spark, path)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
       finally in.close()
     }
   }
+
+  /** A store metadata file that exists but cannot be parsed: fail naming
+    * the file and what it holds, never with a bare parse error.
+    */
+  private def malformed(file: String, body: String, what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"malformed store metadata $file: $what (content: \"${body.take(200)}\")")
 
   private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
       path: String, body: String): Unit = {

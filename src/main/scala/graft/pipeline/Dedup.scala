@@ -335,7 +335,7 @@ object Dedup {
       .where(col("a") < col("b")).select(col("a"), col("b")).distinct()
   }
 
-  private def verify(cand: DataFrame, d: DataFrame): DataFrame =
+  private[graft] def verify(cand: DataFrame, d: DataFrame): DataFrame =
     cand
       .join(d.select(col("id").as("a"), col("grams").as("ga")), "a")
       .join(d.select(col("id").as("b"), col("grams").as("gb")), "b")

@@ -484,10 +484,19 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     // not guess 64
     Files.delete(Paths.get(store, "_meta.txt"))
     intercept[Exception] { EdgeStore.readBuckets(spark, store) }
-    // a corrupt sidecar propagates too
+    // a corrupt sidecar propagates too, naming the file and its content
+    // (its stale checksum sidecar goes first, or the read fails the checksum
+    // before the content is parsed)
+    Files.deleteIfExists(Paths.get(store, "._meta.txt.crc"))
     Files.writeString(Paths.get(store, "_meta.txt"), "junk")
-    intercept[Exception] { EdgeStore.readBuckets(spark, store) }
+    val e = intercept[IllegalArgumentException] { EdgeStore.readBuckets(spark, store) }
+    assert(e.getMessage.contains("_meta.txt") && e.getMessage.contains("junk"), e.getMessage)
     Files.delete(Paths.get(store, "_meta.txt"))
+    // so does a non-numeric merge tag
+    Files.writeString(Paths.get(store, "_last_merge_tag"), "7x")
+    val t = intercept[IllegalArgumentException] { EdgeStore.lastMergeTag(spark, store) }
+    assert(t.getMessage.contains("_last_merge_tag") && t.getMessage.contains("7x"), t.getMessage)
+    Files.delete(Paths.get(store, "_last_merge_tag"))
     // genuinely absent meta (pre-meta store) still defaults
     metaDir.listFiles().foreach(_.delete()); metaDir.delete()
     assert(EdgeStore.readBuckets(spark, store) == 64)

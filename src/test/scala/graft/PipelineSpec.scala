@@ -209,15 +209,11 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       threshold = th, maxDf = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         BigDecimal(r.getDouble(2)).setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSet
-    def outUnpruned(th: Double) = {
-      val m = Dedup.getClass.getDeclaredMethods.find(_.getName == "verify").get
-      m.setAccessible(true)
-      m.invoke(Dedup, Dedup.ngramCandidates(d, 10), d)
-        .asInstanceOf[org.apache.spark.sql.DataFrame]
+    def outUnpruned(th: Double) =
+      Dedup.verify(Dedup.ngramCandidates(d, 10), d)
         .where(col("jaccard") >= th)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           BigDecimal(r.getDouble(2)).setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSet
-    }
     for (th <- Seq(0.3, 0.5)) assert(out(th) == outUnpruned(th), s"threshold $th")
   }
 

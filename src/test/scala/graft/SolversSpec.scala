@@ -129,21 +129,11 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
       "ArnoldiPageRank.run" -> 19,
       "ConnectedComponents.run" -> 20,
       "LabelPropagation.run" -> 31)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try for ((name, solve) <- solves) {
+    for ((name, solve) <- solves) {
       solve() // warm up (graph prep persists a fixed set of frames)
       val before = sc.getPersistentRDDs.size
-      org.apache.spark.ListenerBusDrain(sc)
-      jobs.set(0)
-      solve()
-      org.apache.spark.ListenerBusDrain(sc)
-      val count = jobs.get
+      val count = graft.tools.Probe.measure(spark, name)(solve())._2.jobs
       val after = sc.getPersistentRDDs.size
       info(s"$name: $count jobs")
       // rolling truncation retires every intermediate; only the final
@@ -151,7 +141,7 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
       assert(after - before <= 2, s"$name: cached blocks grew $before -> $after")
       assert(count <= jobsAtParent(name),
         s"$name: $count jobs per solve, ${jobsAtParent(name)} at the parent")
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("empty vertex domain: rank solvers refuse it, CC and LP return no rows") {
